@@ -1,5 +1,7 @@
 """Idempotent resume + lineage tests (FIXTURES.md §5, SURVEY.md §5.2.4)."""
 
+import pathlib
+
 import pytest
 
 from tests.conftest import SF_DIR
@@ -12,24 +14,68 @@ def pages(spark):
     return pages_from_documents(spark, SF_DIR)
 
 
-def test_null_html_rows_become_error_rows(spark, tmp_path_factory):
-    import datetime as dt
+def _bucket_files(out):
+    """{bucket dir name: {parquet file name: mtime_ns}} of the extracted output."""
+    return {
+        d.name: {f.name: f.stat().st_mtime_ns for f in d.glob("*.parquet")}
+        for d in pathlib.Path(out, "extracted").glob("bucket=*")
+    }
 
-    from usls_doc_spark.pipeline.checkpoint import run_extraction_job
+
+def _tiny_pages(spark):
+    import datetime as dt
 
     rows = [
         ("u-null", dt.datetime(2024, 1, 1), None, "t", "en"),
         ("u-ok", dt.datetime(2024, 1, 1), b"<p>hello world text</p>", "t", "en"),
     ]
-    pages = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, schema="url string, warc_ts timestamp, html binary, text string, lang string"
     )
+
+
+def test_null_html_rows_become_error_rows(spark, tmp_path_factory):
+    from usls_doc_spark.pipeline.checkpoint import run_extraction_job
+
     out = str(tmp_path_factory.mktemp("nullhtml"))
-    run_extraction_job(spark, pages, out, run_id="n1", n_buckets=4)
+    run_extraction_job(spark, _tiny_pages(spark), out, run_id="n1", n_buckets=4)
     got = {r["url"]: r for r in spark.read.parquet(f"{out}/extracted").collect()}
     assert set(got) == {"u-null", "u-ok"}  # null html NOT silently dropped
     assert got["u-null"]["error"] is not None
     assert got["u-ok"]["error"] is None
+
+
+def test_session_overwrite_mode_is_not_changed(spark, tmp_path_factory):
+    """Dynamic overwrite is a writer option of the job, not a session
+    setting that would turn the caller's later overwrites dynamic."""
+    from usls_doc_spark.pipeline.checkpoint import run_extraction_job
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path_factory.mktemp("confleak"))
+        run_extraction_job(spark, _tiny_pages(spark), out, run_id="c1", n_buckets=4)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_completed_buckets_missing_vs_corrupt_checkpoint(spark, tmp_path):
+    from py4j.protocol import Py4JJavaError
+
+    from usls_doc_spark.pipeline.checkpoint import completed_buckets
+
+    # no run has written a checkpoint yet: nothing is done
+    assert completed_buckets(spark, str(tmp_path / "never-run")) == set()
+
+    # a checkpoint that exists but cannot be read must not silently
+    # reprocess every bucket
+    ck = tmp_path / "corrupt" / "_checkpoint"
+    ck.mkdir(parents=True)
+    (ck / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        completed_buckets(spark, str(tmp_path / "corrupt"))
 
 
 def test_resume_from_partial_run(spark, pages, tmp_path_factory):
@@ -45,6 +91,7 @@ def test_resume_from_partial_run(spark, pages, tmp_path_factory):
     assert len(r1["buckets"]) == 16
     part1 = spark.read.parquet(f"{out}/extracted")
     assert 0 < part1.count() < n_input
+    files1 = _bucket_files(out)
 
     # run 2: resume processes ONLY the remaining buckets
     r2 = run_extraction_job(spark, pages, out, run_id="run2")
@@ -53,10 +100,15 @@ def test_resume_from_partial_run(spark, pages, tmp_path_factory):
     assert full.count() == n_input
     # keyed by url, exactly once (idempotency invariant)
     assert full.select("url").distinct().count() == n_input
+    # one file per bucket; the resume left run 1's bucket files untouched
+    files2 = _bucket_files(out)
+    assert all(len(f) == 1 for f in files2.values()), files2
+    assert {b: files2[b] for b in files1} == files1
 
     # run 3: nothing left -> no-op, output unchanged
     r3 = run_extraction_job(spark, pages, out, run_id="run3")
     assert r3["skipped"]
+    assert r3.keys() == r2.keys()  # same summary shape on every path
     assert spark.read.parquet(f"{out}/extracted").count() == n_input
 
     # lineage doc_count sums equal input row count; byte counts match output
@@ -80,3 +132,4 @@ def test_resume_from_partial_run(spark, pages, tmp_path_factory):
     again = spark.read.parquet(f"{out}/extracted")
     assert again.count() == n_input
     assert again.select("url").distinct().count() == n_input
+    assert all(len(f) == 1 for f in _bucket_files(out).values())
