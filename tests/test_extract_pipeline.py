@@ -79,24 +79,28 @@ def test_corrupt_rows_degrade_not_fail(spark):
     assert out["u-ok"]["extracted_text"] == "T hello world"
 
 
-def test_batched_rows_bitwise_equal_per_page_path():
-    """Round-6 kernel lever A/B: extract_rows (decode batched across the
-    whole Arrow batch) must be BITWISE identical to the per-page
-    extract_page path over the full corpus — including skew pages, table
-    pages, two-column pages, and interleaved corrupt rows."""
+def _corpus_pages():
     import duckdb
-    import numpy as np
 
     from usls_doc_spark.io.synth import synth_page
-    from usls_doc_spark.kernels.stub_layout import StubLayoutModel
-    from usls_doc_spark.pipeline.extract import extract_page, extract_rows
 
     docs = duckdb.sql(
         f"SELECT doc_id, text, lang FROM '{SF_DIR}/documents.parquet'"
     ).fetchall()
+    return [synth_page(d, t, l) for d, t, l in docs]
+
+
+def test_batched_rows_bitwise_equal_per_page_path():
+    """One whole-corpus extract_rows call must be BITWISE identical, row
+    by row, to extract_rows over each page alone — including skew pages,
+    table pages, two-column pages, and interleaved corrupt rows."""
+    import numpy as np
+
+    from usls_doc_spark.kernels.stub_layout import StubLayoutModel
+    from usls_doc_spark.pipeline.extract import extract_rows
+
     htmls, urls = [], []
-    for i, (d, t, l) in enumerate(docs):
-        p = synth_page(d, t, l)
+    for i, p in enumerate(_corpus_pages()):
         htmls.append(p["html"])
         urls.append(p["url"])
         if i % 97 == 0:  # interleave corrupt rows among real pages
@@ -104,51 +108,100 @@ def test_batched_rows_bitwise_equal_per_page_path():
             urls.append(f"u-null-{i}")
     model = StubLayoutModel()
     batched = extract_rows(htmls, urls, model)
+    assert len(batched) == len(htmls)
     for h, u, got in zip(htmls, urls, batched):
-        want = extract_page(h, u, model)
-        # float32 conf compared by exact bits via np.float32 equality
+        (want,) = extract_rows([h], [u], model)
         assert got["url"] == want["url"]
         assert got["extracted_text"] == want["extracted_text"]
         assert got["error"] == want["error"]
         assert got["n_blocks"] == want["n_blocks"]
         assert got["extracted_bytes"] == want["extracted_bytes"]
+        assert len(got["blocks"]) == len(want["blocks"]), u
         for gb, wb in zip(got["blocks"], want["blocks"]):
-            assert gb == wb or (
-                {k: v for k, v in gb.items() if k != "conf"}
-                == {k: v for k, v in wb.items() if k != "conf"}
-                and np.float32(gb["conf"]).tobytes()
-                == np.float32(wb["conf"]).tobytes()
-            ), u
+            # float32 conf compared by its exact bits
+            assert {k: v for k, v in gb.items() if k != "conf"} == {
+                k: v for k, v in wb.items() if k != "conf"
+            }, u
+            assert np.float32(gb["conf"]).tobytes() == np.float32(wb["conf"]).tobytes(), u
+
+
+def test_kernels_batched_bitwise_equal_per_page_corpus():
+    """Kernel A/B against the per-page references over every sf0.001
+    page, with an empty page mid-batch: infer_pages_batched == per-page
+    model.infer, and decode_preds_batched == per-page decode_preds."""
+    import numpy as np
+
+    from usls_doc_spark.kernels.boilerplate import parse_blocks
+    from usls_doc_spark.kernels.stub_layout import (
+        StubLayoutModel,
+        infer_pages_batched,
+    )
+    from usls_doc_spark.kernels.yolo_decode import decode_preds, decode_preds_batched
+    from usls_doc_spark.pipeline.extract import _TWO_COL_MARKER
+
+    page_blocks, two_cols = [], []
+    for p in _corpus_pages():
+        html = p["html"].decode("utf-8")
+        page_blocks.append(parse_blocks(html))
+        two_cols.append(_TWO_COL_MARKER in html)
+    mid = len(page_blocks) // 2
+    page_blocks.insert(mid, [])
+    two_cols.insert(mid, False)
+    assert any(two_cols)
+
+    model = StubLayoutModel()
+    heads = [model.infer(b, tc) for b, tc in zip(page_blocks, two_cols)]
+    assert heads[mid][0].size == 0
+    for (p1, s1, c1), (p2, s2, c2) in zip(
+        heads, infer_pages_batched(model, page_blocks, two_cols)
+    ):
+        assert p1.tobytes() == p2.tobytes() and p1.shape == p2.shape
+        assert s1 == s2
+        assert list(c1) == list(c2)
+
+    kw = dict(names=model.names, confs=(0.4,), apply_nms=True)
+    batched = decode_preds_batched([h[0] for h in heads], [h[1] for h in heads], **kw)
+    assert len(batched) == len(heads)
+    for (preds, spec, _), got in zip(heads, batched):
+        want = decode_preds(preds, spec, **kw)
+        assert got.boxes.dtype == want.boxes.dtype == np.float32
+        assert got.boxes.tobytes() == want.boxes.tobytes()
+        assert got.confs.dtype == want.confs.dtype == np.float32
+        assert got.confs.tobytes() == want.confs.tobytes()
+        assert np.array_equal(got.class_ids, want.class_ids)
+        assert np.array_equal(got.anchor_ids, want.anchor_ids)
+        assert got.names == want.names
+
+
+_FALLBACK_HTMLS = [
+    b"<html><body><h1>A</h1><p>alpha beta</p></body></html>",
+    b"<html><body><h1>B</h1><p>gamma delta</p></body></html>",
+    b"<html><body><h1>C</h1><p>epsilon zeta</p></body></html>",
+]
 
 
 def test_fallback_decode_isolates_pathological_page(monkeypatch):
-    """Round-6 ADVICE item 1: when the batched decode fails AND one page's
-    per-page decode also fails, that page alone degrades to an error row —
-    the rest of the Arrow batch still extracts (S3 skip-unreadable)."""
+    """When a batched decode holding page u1 fails, the batch re-runs page
+    by page and u1 alone degrades to an error row — the rest of the Arrow
+    batch still extracts (S3 skip-unreadable)."""
+    import numpy as np
+
     import usls_doc_spark.pipeline.extract as px
+    from usls_doc_spark.kernels.boilerplate import parse_blocks
     from usls_doc_spark.kernels.stub_layout import StubLayoutModel
 
-    def boom_batched(*a, **k):
-        raise RuntimeError("batched decode exploded")
+    model = StubLayoutModel()
+    u1_head = model.infer(parse_blocks(_FALLBACK_HTMLS[1].decode()), False)[0]
+    real_decode = px.decode_preds_batched
 
-    real_decode = px.decode_preds
-    calls = {"i": -1}
-
-    def boom_second_page(*a, **k):
-        calls["i"] += 1
-        if calls["i"] == 1:
+    def boom_with_u1(preds_list, specs, **k):
+        if any(np.array_equal(p, u1_head) for p in preds_list):
             raise ValueError("pathological page")
-        return real_decode(*a, **k)
+        return real_decode(preds_list, specs, **k)
 
-    monkeypatch.setattr(px, "decode_preds_batched", boom_batched)
-    monkeypatch.setattr(px, "decode_preds", boom_second_page)
+    monkeypatch.setattr(px, "decode_preds_batched", boom_with_u1)
 
-    htmls = [
-        b"<html><body><h1>A</h1><p>alpha beta</p></body></html>",
-        b"<html><body><h1>B</h1><p>gamma delta</p></body></html>",
-        b"<html><body><h1>C</h1><p>epsilon zeta</p></body></html>",
-    ]
-    rows = px.extract_rows(htmls, ["u0", "u1", "u2"], StubLayoutModel())
+    rows = px.extract_rows(_FALLBACK_HTMLS, ["u0", "u1", "u2"], model)
     by = {r["url"]: r for r in rows}
     assert len(rows) == 3
     assert by["u1"]["error"] is not None and "pathological" in by["u1"]["error"]
@@ -158,32 +211,21 @@ def test_fallback_decode_isolates_pathological_page(monkeypatch):
 
 
 def test_fallback_infer_isolates_pathological_page(monkeypatch):
-    """Round-7 infer batching keeps S3 semantics: when the batched infer
-    fails AND one page's per-page infer also fails, that page alone
-    degrades to an error row."""
+    """When a batched infer holding page u1 fails, u1 alone degrades to an
+    error row."""
     import usls_doc_spark.pipeline.extract as px
     from usls_doc_spark.kernels.stub_layout import StubLayoutModel
 
-    def boom_batched(*a, **k):
-        raise RuntimeError("batched infer exploded")
+    real_infer = px.infer_pages_batched
 
-    monkeypatch.setattr(px, "infer_pages_batched", boom_batched)
+    def boom_with_u1(model, page_blocks, two_cols):
+        if any(b.text == "gamma delta" for pb in page_blocks for b in pb):
+            raise ValueError("pathological infer page")
+        return real_infer(model, page_blocks, two_cols)
 
-    class FlakyModel(StubLayoutModel):
-        calls = 0
+    monkeypatch.setattr(px, "infer_pages_batched", boom_with_u1)
 
-        def infer(self, blocks, two_col):
-            FlakyModel.calls += 1
-            if FlakyModel.calls == 2:
-                raise ValueError("pathological infer page")
-            return super().infer(blocks, two_col)
-
-    htmls = [
-        b"<html><body><h1>A</h1><p>alpha beta</p></body></html>",
-        b"<html><body><h1>B</h1><p>gamma delta</p></body></html>",
-        b"<html><body><h1>C</h1><p>epsilon zeta</p></body></html>",
-    ]
-    rows = px.extract_rows(htmls, ["u0", "u1", "u2"], FlakyModel())
+    rows = px.extract_rows(_FALLBACK_HTMLS, ["u0", "u1", "u2"], StubLayoutModel())
     by = {r["url"]: r for r in rows}
     assert by["u1"]["error"] is not None and "pathological" in by["u1"]["error"]
     assert by["u0"]["error"] is None and by["u0"]["extracted_text"] == "A alpha beta"

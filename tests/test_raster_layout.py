@@ -69,9 +69,9 @@ def test_nms_collapses_duplicate_anchors_to_first():
 
 
 def test_flow_layout_fast_path_ab():
-    """A/B: the vectorized single-column flow must be bitwise-identical to
-    the sequential loop (forced by a two_col=False / col_set-empty walk of
-    the same reference algorithm) on real corpus pages and fuzz blocks."""
+    """A/B: flow_layout's single-column flow must be bitwise-identical to
+    the reference loop (a two_col=False / col_set-empty walk of the same
+    algorithm) on real corpus pages and fuzz blocks."""
     import duckdb
     import numpy as np
 
@@ -116,8 +116,7 @@ def test_flow_layout_fast_path_ab():
         ab(blocks, classes)
 
     rng = np.random.default_rng(9)
-    # small pages (loop path), threshold straddle (255/256/257), and
-    # skew-page sizes (vector path)
+    # small pages, 255/256/257 blocks, and skew-page sizes
     for m in [0, 1, 2, 255, 256, 257, 600, 2400] + [
         int(rng.integers(0, 60)) for _ in range(20)
     ]:

@@ -65,25 +65,6 @@ def flow_layout(
     n_left = (len(body_idx) + 1) // 2
     left_set = set(body_idx[:n_left])
 
-    if not col_set and n >= 256:
-        # single-column VECTOR path for oversized (skew) pages only: the
-        # flow is a plain prefix sum — integer-exact, identical to the
-        # loop below (A/B-proven in test_raster_layout.py). Below the
-        # threshold the loop wins: fresh array construction dominates at
-        # tens of blocks in this environment (CLAUDE.md gotcha).
-        chars = np.fromiter((b.n_chars for b in blocks), dtype=np.int64, count=n)
-        nn = np.maximum(chars, 1)
-        cpl = max(1, CONTENT_W // CHAR_W)
-        h = (nn + cpl - 1) // cpl * LINE_H
-        step = h + BLOCK_GAP
-        boxes[:, 0] = MARGIN
-        boxes[:, 1] = MARGIN + np.concatenate(([0], np.cumsum(step)[:-1]))
-        boxes[:, 2] = np.minimum(nn, cpl) * CHAR_W
-        boxes[:, 3] = h
-        y_end = MARGIN + int(step.sum())
-        page_h = max(y_end - BLOCK_GAP + MARGIN, MARGIN * 2 + LINE_H)
-        return boxes, int(page_h), PAGE_W
-
     y = MARGIN
     col_y = {0: 0, 1: 0}
     col_started = False
@@ -162,7 +143,9 @@ def infer_pages_batched(
 ) -> list[tuple[np.ndarray, LetterboxSpec, list[str]]]:
     """Batch StubLayoutModel.infer across all of an Arrow batch's pages in
     one numpy pass — bit-identical to calling ``model.infer`` per page
-    (corpus A/B in tests/test_extract_pipeline.py).
+    (A/B over the sf0.001 corpus and edge pages in
+    tests/test_extract_pipeline.py::test_kernels_batched_bitwise_equal_per_page_corpus
+    and ::test_infer_pages_batched_bitwise_equal_edge_pages).
 
     What amortizes (round-7 kernel lever, the decode_preds_batched
     pattern one stage earlier): block classification runs ONCE over the
@@ -170,7 +153,7 @@ def infer_pages_batched(
     vector path, whose fixed fromiter/alloc cost made it a loss per-page
     below 256 blocks); the single-column flow layout becomes ONE
     segmented prefix sum over all eligible pages (exactly the integers of
-    flow_layout's per-page paths); and the raw-head row build is one
+    flow_layout's per-page loop); and the raw-head row build is one
     [total_blocks, 4+C] fill + one dup copy instead of two allocations
     per page. Two-column pages keep the sequential flow_layout loop (the
     column balancing is inherently per-page) but still join the batched

@@ -154,9 +154,11 @@ def decode_preds_batched(
     apply_nms: bool = True,
 ) -> list[DecodedBoxes]:
     """decode_preds over MANY pages in one numpy pass — bit-identical to
-    calling decode_preds per page (A/B-asserted in tests/test_extract
-    _pipeline.py): argmax/threshold/un-letterbox run on the concatenated
-    head with per-row ratio/pad gathers, so the per-call numpy overhead
+    calling decode_preds per page (A/B over every sf0.001 page head, with
+    an empty head mid-batch, in tests/test_extract_pipeline.py::
+    test_kernels_batched_bitwise_equal_per_page_corpus): argmax/threshold/
+    un-letterbox run on the concatenated head with per-row ratio/pad
+    gathers, so the per-call numpy overhead
     (the dominant cost at ~50-anchor pages in this sandbox — CLAUDE.md
     allocation gotcha) is paid once per BATCH instead of once per page.
     NMS stays per page (its loop is over kept boxes, already tiny).
