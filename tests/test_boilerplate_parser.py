@@ -349,3 +349,128 @@ def test_classify_blocks_vectorized_ab():
         adv.append(b)
     ab(adv)
     ab([])
+
+
+def test_single_pass_fuzz_well_formed():
+    """Property: pages assembled from WELL-FORMED fragments stay inside the
+    single-pass tokenizer's subset (no stdlib fallback) and its blocks equal
+    stdlib html.parser's. The fuzz above mixes in broken markup, which
+    falls back to stdlib; this one holds the fast path itself to account."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from usls_doc_spark.kernels.boilerplate import _fast_parse, parse_blocks_stdlib
+
+    names = st.sampled_from(
+        "p div span li ul a table tr td th h1 h2 nav footer aside header "
+        "caption figcaption noscript template br img P DIV A Td".split()
+    )
+    attr_values = st.sampled_from(
+        ["ad", "sidebar menu", "Content", "a&amp;b", "x/", "", "promo related", "&#97;d"]
+    )
+    quotes = st.sampled_from(['"{}"', "'{}'", "{}"])
+    attr_names = st.sampled_from(["class", "CLASS", "href", "id", "data-class", "classy"])
+
+    @st.composite
+    def start_tags(draw):
+        attrs = ""
+        for _ in range(draw(st.integers(0, 3))):
+            name, value, q = draw(attr_names), draw(attr_values), draw(quotes)
+            if q == "{}" and not value:
+                q = '""'  # an empty bare value is not a value
+            ws = draw(st.sampled_from([" ", "\n", " \t"]))
+            eq = draw(st.sampled_from(["=", " = "]))
+            attrs += f"{ws}{name}{eq}{q.format(value)}"
+        if draw(st.booleans()):
+            attrs += " hidden"
+        tail = draw(st.sampled_from([">", " >", "/>", " />"]))
+        return f"<{draw(names)}{attrs}{tail}"
+
+    end_tags = st.builds(
+        lambda n, ws: f"</{n}{ws}>", names, st.sampled_from(["", " ", "\n"])
+    )
+    texts = st.text(
+        alphabet=st.characters(blacklist_categories=("Cs",), blacklist_characters="<"),
+        max_size=12,
+    )
+    raw_text = st.builds(
+        lambda name, body, case, pad: f"<{name}>{body}</{pad}{case(name)}{pad}>",
+        st.sampled_from(["script", "style"]),
+        st.sampled_from(["", "var a = '<p>x</p>';", "p{}", "</scriptx>", "if (a<b) {}"]),
+        st.sampled_from([str.lower, str.upper, str.title]),
+        st.sampled_from(["", " ", "\n"]),
+    )
+    fixed = st.sampled_from(
+        [
+            "<!-- c -->", "<!--x--\n>", "<!DOCTYPE html>", "<?xml version='1.0'?>",
+            "<br/>", "<br>", "&amp;", "&lt;", "&#65;", "&bogus;", "< ", "<<p>",
+            "<script src='a.js'/>", "<img class='banner' src=x/>",
+        ]
+    )
+    fragment = st.one_of(start_tags(), end_tags, texts, raw_text, fixed)
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.lists(fragment, max_size=30))
+    def check(parts):
+        html = "".join(parts)
+        fast = [_block_key(b) for b in _fast_parse(html)]
+        slow = [_block_key(b) for b in parse_blocks_stdlib(html)]
+        assert fast == slow, f"divergence on {html!r}"
+
+    check()
+
+
+def test_single_pass_needs_no_stdlib(monkeypatch):
+    """Real traffic stays on the single-pass path: every sf0.001 synth page
+    and a page with script, style, comments and a doctype parse with the
+    stdlib fallback disabled."""
+    import duckdb
+
+    from tests.conftest import SF_DIR
+    from usls_doc_spark.io.synth import synth_page
+    from usls_doc_spark.kernels import boilerplate
+
+    oracle = boilerplate.parse_blocks_stdlib
+    pages = [
+        synth_page(doc_id, text, lang)["html"].decode()
+        for doc_id, text, lang in duckdb.sql(
+            f"SELECT doc_id, text, lang FROM '{SF_DIR}/documents.parquet'"
+        ).fetchall()
+    ]
+    pages.append(
+        "<!DOCTYPE html><html><head><!-- build 7 --><style>p > a { color: red }</style>"
+        '<script type="text/javascript">if (a < b && c) { x = "</p>"; }</script>'
+        "</head><body><!--[if IE]><p>old</p><![endif]--><p>kept &amp; shown</p>"
+        '<script src="a.js"></SCRIPT ><nav class="menu"><a href="/">home</a></nav>'
+        "</body></html>"
+    )
+    expected = [[_block_key(b) for b in oracle(html)] for html in pages]
+
+    def no_fallback(html):
+        raise AssertionError(f"stdlib fallback on {html[:80]!r}")
+
+    monkeypatch.setattr(boilerplate, "parse_blocks_stdlib", no_fallback)
+    got = [[_block_key(b) for b in boilerplate.parse_blocks(html)] for html in pages]
+    assert got == expected
+    assert any(expected[-1]) and len(pages) > 500
+
+
+def test_class_attribute_and_tag_name_edges_match_stdlib():
+    """Attribute and tag-name rules a regex tokenizer easily gets wrong:
+    the LAST class attribute wins, a bare value runs through '/', 'a= b'
+    makes b the value of a, and '\\v' after a tag name is part of the name."""
+    from usls_doc_spark.kernels.boilerplate import parse_blocks, parse_blocks_stdlib
+
+    for html in (
+        '<div class="x" class="ad"><p>t</p></div>',
+        '<div class="ad" class="x"><p>t</p></div>',
+        "<div class=ad/x><p>t</p></div>",
+        "<div class=ad/><p>t</p></div>",
+        "<div a= class=ad><p>t</p></div>",
+        "<div title='a class=ad b'><p>t</p></div>",
+        "<div class><p>t</p></div>",
+        "<p\x0b>text</p>",
+    ):
+        fast = [_block_key(b) for b in parse_blocks(html)]
+        slow = [_block_key(b) for b in parse_blocks_stdlib(html)]
+        assert fast == slow, html

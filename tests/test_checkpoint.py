@@ -61,6 +61,37 @@ def test_session_overwrite_mode_is_not_changed(spark, tmp_path_factory):
         spark.conf.set(key, before)
 
 
+def test_checkpoint_rows_one_file_per_call(spark, tmp_path_factory):
+    """Each job call appends its checkpoint rows as ONE parquet file, with
+    the same rows and schema as before: bucket nullable, counts NOT NULL."""
+    import pyarrow.parquet as pq
+
+    from usls_doc_spark.pipeline.checkpoint import run_extraction_job
+
+    out = str(tmp_path_factory.mktemp("ckrows"))
+    run_extraction_job(spark, _tiny_pages(spark), out, run_id="k1", n_buckets=4, max_buckets=3)
+    run_extraction_job(spark, _tiny_pages(spark), out, run_id="k2", n_buckets=4)
+    files = sorted(pathlib.Path(out, "_checkpoint").glob("*.parquet"))
+    assert len(files) == 2, files
+    schema = pq.read_schema(files[0])
+    assert [(f.name, str(f.type), f.nullable) for f in schema] == [
+        ("run_id", "string", False),
+        ("bucket", "int32", True),
+        ("status", "string", False),
+        ("doc_count", "int64", False),
+        ("byte_count", "int64", False),
+        ("updated_at", "timestamp[ns]", False),
+    ]
+    rows = spark.read.parquet(f"{out}/_checkpoint").select(
+        "run_id", "bucket", "status", "doc_count"
+    )
+    got = sorted(tuple(r) for r in rows.collect())
+    assert [g[:3] for g in got] == [
+        ("k1", 0, "done"), ("k1", 1, "done"), ("k1", 2, "done"), ("k2", 3, "done")
+    ]
+    assert sum(g[3] for g in got) == 2  # both pages, each counted once
+
+
 def test_completed_buckets_missing_vs_corrupt_checkpoint(spark, tmp_path):
     from py4j.protocol import Py4JJavaError
 

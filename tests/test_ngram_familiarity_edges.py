@@ -65,6 +65,30 @@ def test_exec_matches_template_on_edge_corpus(spark):
     assert got == want  # bit-identical doubles, identical row set
 
 
+def test_exec_carries_null_doc_id_like_template(spark):
+    """A NULL doc_id must not crash the trigram kernel: the template
+    groups NULL ids into one NULL row, and so must the exec."""
+    from usls_doc_spark.operators.text_exec import _qnf_from_documents
+
+    docs = DOCS + [
+        (None, "null id document text", "en"),
+        (None, "another null id doc", "en"),
+        (None, "ab", "en"),
+    ]
+    sdf = spark.createDataFrame(docs, "doc_id bigint, text string, lang string")
+    sdf.createOrReplaceTempView("documents")
+
+    def rows(df):  # the NULL doc_id row sorts first
+        return sorted(
+            (tuple(r) for r in df.collect()), key=lambda r: (r[0] is not None, r[0] or 0)
+        )
+
+    want = rows(spark.sql(q_quality_ngram_familiarity(SPARK)))
+    got = rows(_qnf_from_documents(spark))
+    assert want[0][0] is None
+    assert got == want
+
+
 def test_familiarity_values_exact():
     con = _duck()
     rows = {r[0]: r for r in con.sql(q_quality_ngram_familiarity(DUCK)).fetchall()}

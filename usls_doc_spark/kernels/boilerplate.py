@@ -87,6 +87,12 @@ class Block:
         return float(np.float32(self.link_chars) / np.float32(max(self.n_chars, 1)))
 
 
+def _close_block(blocks: list[Block], blk: Block) -> None:
+    blk.text = " ".join("".join(blk._parts).split())
+    if blk.text:
+        blocks.append(blk)
+
+
 class _BlockParser(HTMLParser):
     """Segment HTML into text blocks, tracking anchor text and boilerplate
     ancestry. Never raises on malformed input (S3 semantics,
@@ -110,10 +116,7 @@ class _BlockParser(HTMLParser):
         self._open.append(Block(tag=tag, boilerplate_ancestor=self._bp_depth > 0))
 
     def _end_block(self) -> None:
-        blk = self._open.pop()
-        blk.text = " ".join("".join(blk._parts).split())
-        if blk.text:
-            self.blocks.append(blk)
+        _close_block(self.blocks, self._open.pop())
 
     def handle_starttag(self, tag, attrs):
         f = _TAG_FLAGS.get(tag, 0)
@@ -190,315 +193,190 @@ class _BlockParser(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# fast tokenizer: single-pass regex scan with the _BlockParser handler
-# semantics inlined over plain locals (stdlib html.parser spends ~60% of
-# extraction time in its char-by-char goahead loop; the per-event method
-# dispatch was the next-largest share). Byte-identical block output is
-# enforced by tests/test_boilerplate_parser.py differential tests over all
-# fixture pages and an adversarial corpus.
+# single-pass tokenizer: one findall of _TOKEN_RE splits the page into
+# (end name, start name, class value, slash, bare '<', untokenizable,
+# following text) tuples in C; one Python loop runs the _BlockParser handler
+# semantics over them on plain locals. Comments, declarations, processing
+# instructions and whole script/style elements (raw text up to stdlib's
+# strict close) are tokens with no effect on the state machine, so they only
+# end the text chunk before them. Stdlib delivers text in the same chunks
+# (up to the next '<'), which link_chars depends on.
+#
+# Fallback rule: the grammar is the subset of markup whose stdlib reading
+# is known exactly. A '<' that starts nothing in the subset (a tag outside
+# the well-formed grammar, '</' + non-name, '<![', any construct left
+# unterminated at EOF, an unclosed script/style) makes the WHOLE page
+# re-parse through parse_blocks_stdlib, the oracle; stdlib's tolerant
+# recovery has too many quirks to replicate. Shrinking the subset is always
+# safe. Byte-identical block output is enforced by the differential tests
+# in tests/test_boilerplate_parser.py.
+#
+# Grammar notes, each matching a stdlib html.parser rule:
+# - whitespace between tag parts is [ \t\n\r\f], the set that ends a stdlib
+#   tag name; \v or Unicode spaces there fall back ('<p\v>' is a tag named
+#   'p\v' to stdlib).
+# - attribute names and bare values exclude quotes, '`', '=', '<' and all
+#   Unicode whitespace; bare values are non-empty, since stdlib reads
+#   'a= b' as a="b".
+# - the class value is the LAST class attribute's (stdlib builds a dict of
+#   the attrs), captured by the repeated group; a class attribute without
+#   a value falls back, as that would need the capture reset.
+# - tag names are ASCII (no IGNORECASE: 'ſ' case-folds to 's'); the
+#   script/style close uses IGNORECASE and Unicode \s exactly as stdlib's
+#   CDATA close pattern does.
+# - every run of a class is followed by a character outside that class (a
+#   bare value may end in '/' only before '>'), so no match needs
+#   backtracking: the possessive quantifiers change no match and spare the
+#   regex engine its backtrack bookkeeping.
 # ---------------------------------------------------------------------------
 
-# WELL-FORMED tag grammar only: simple name, whitespace-separated attrs with
-# quoted or plain bare values. Anything outside this subset (stray quotes in
-# attr names, '<' inside tags, '/' not before '>', junk in end tags, ...)
-# raises _FallbackToStdlib and the WHOLE page re-parses through stdlib
-# html.parser — its tolerant-recovery grammar has too many quirks to
-# replicate safely, and real pages that trip it are rare, so correctness is
-# guaranteed by construction and speed preserved for the common case.
-# re.ASCII: python's Unicode \s accepts \x1c-\x1f/\x85/\xa0 as whitespace,
-# which stdlib's tolerant tag grammar recovers from differently — those
-# pages must FALL BACK, not parse here. '<' is likewise excluded from attr
-# tokens ('<p\x1f<p>' must not read as one tag with a '<p' attribute).
-# Shrinking the accepted subset is always safe: rejected pages reparse
-# through stdlib (the oracle), they are never mis-tokenized.
-_TAG_RE = re.compile(
-    r"<(?P<end>/)?(?P<name>[a-zA-Z][a-zA-Z0-9:._-]*)"
-    r"(?P<attrs>(?:\s+[^\s/>='\"`<]+(?:\s*=\s*(?:\"[^\"]*\"|'[^']*'|[^\s>'\"`=<]*))?)*)"
-    r"\s*(?P<slash>/?)>",
-    re.ASCII,
+_WS = r"[ \t\n\r\f]"
+_TAG_NAME = r"[a-zA-Z][-.a-zA-Z0-9:_]*+"
+_ATTR_NAME_CHAR = r"""[^\s/>='"`<]"""
+_ATTR_NAME = _ATTR_NAME_CHAR + "++"
+_ATTR_VALUE = r"""(?:"[^"]*+"|'[^']*+'|[^\s>'"`=<]++)"""
+_CLASS_NAME = r"[cC][lL][aA][sS][sS]"
+_ATTRS = rf"(?:{_WS}++{_ATTR_NAME}(?:{_WS}*+={_WS}*+{_ATTR_VALUE})?+)*+"
+
+
+def _ascii_any_case(name: str) -> str:
+    return "".join(f"[{c.lower()}{c.upper()}]" for c in name)
+
+
+_CDATA_TAGS = sorted(CDATA_CONTENT_TAGS)
+_CDATA_OPEN = rf"(?:{'|'.join(map(_ascii_any_case, _CDATA_TAGS))}){_ATTRS}{_WS}*+>"
+
+_TOKEN_RE = re.compile(
+    rf"(?:</{_WS}*+({_TAG_NAME}){_WS}*+>"  # end tag
+    # script/style element: raw text up to stdlib's strict close
+    + "".join(
+        rf"|<{_ascii_any_case(t)}{_ATTRS}{_WS}*+>.*?</\s*(?i:{t})\s*>" for t in _CDATA_TAGS
+    )
+    # start tag, not of an unclosed script/style; group 3 is the last class
+    # attribute's raw value
+    + rf"|<(?!{_CDATA_OPEN})({_TAG_NAME})"
+    rf"(?:{_WS}++(?:{_CLASS_NAME}{_WS}*+={_WS}*+({_ATTR_VALUE})"
+    rf"|(?!{_CLASS_NAME}(?!{_ATTR_NAME_CHAR})){_ATTR_NAME}"
+    rf"(?:{_WS}*+={_WS}*+{_ATTR_VALUE})?+))*+"
+    rf"{_WS}*+(/?)>"
+    r"|<!--.*?--\s*>"  # comment, closed by stdlib's '--\s*>'
+    r"|<!(?!--|\[)[^>]*+>"  # <!DOCTYPE ...> and bogus comments
+    r"|<\?[^>]*+>"  # processing instruction
+    r"|(<)(?![a-zA-Z/!?])"  # bare '<' is text
+    # anything else is outside the subset: take the rest of the page, so
+    # the scan ends at the first such '<' (pages fall back whole anyway)
+    r"|(<.*)"
+    r")([^<]*+)",
+    re.DOTALL,
 )
 
 
 class _FallbackToStdlib(Exception):
-    """Markup outside the fast tokenizer's well-formed subset."""
-_CLASS_RE = re.compile(
-    r"""[\s"']class\s*=\s*("([^"]*)"|'([^']*)'|([^\s>/]+))""", re.IGNORECASE
-)
-# stdlib closes comments with _markupbase._commentclose = r'--\s*>' —
-# whitespace IS allowed between -- and > ('<!--x--\n>' ends the comment).
-# Same pattern verbatim (deliberately NOT re.ASCII: this REPLICATES
-# stdlib, it does not approximate it, so exotic-whitespace closers must
-# match too). A literal find('-->') here mis-parsed '--\n>' closers —
-# caught by the 20k-example differential fuzz, round 5.
-_COMMENT_CLOSE_RE = re.compile(r"--\s*>")
-# stdlib exits CDATA mode only on a STRICT close tag r'</\s*tag\s*>' with
-# the exact element name — '</scriptx>' or '</script x=1>' stay inside.
-# Only script/style: stdlib's CDATA_CONTENT_ELEMENTS excludes noscript/
-# template, whose inner tags must keep firing the handlers.
-_SKIP_CLOSE_RES = {
-    t: re.compile(rf"</\s*{t}\s*>", re.IGNORECASE) for t in CDATA_CONTENT_TAGS
-}
+    """Markup outside the single-pass tokenizer's subset."""
 
 
 def _fast_parse(html: str) -> list[Block]:
-    """Single-function tokenizer + block state machine over plain locals.
+    """Run the _BlockParser handler semantics over _TOKEN_RE's tokens.
 
-    Semantics are EXACTLY the _BlockParser handlers driven by the regex
-    tokenizer (the pre-round-5 ``_fast_feed`` shape), with the per-event
-    method dispatch and attribute traffic inlined away — the handlers run
-    ~300x per page and were the largest remaining share of extraction
-    kernel time after the NMS conflict-graph fix. Byte-identical block
-    output vs the stdlib path is enforced by the differential tests in
-    tests/test_boilerplate_parser.py (fixtures + adversarial corpus +
-    hypothesis fuzz). Raises _FallbackToStdlib outside the well-formed
-    subset; any other internal error degrades to the blocks recovered so
-    far (S3 semantics), matching the old except-pass behavior.
+    Text before the first '<' is dropped without a look: no block is open
+    yet. Raises _FallbackToStdlib on the first '<' outside the subset.
     """
     blocks: list[Block] = []
     open_blocks: list[Block] = []
+    # open-element stack of (name, is_boilerplate_marker); see _BlockParser
     elem_stack: list[tuple[str, bool]] = []
-    bp_depth = 0
-    skip_depth = 0
-    anchor_depth = 0
-    merge_depth = 0
+    bp_depth = skip_depth = anchor_depth = merge_depth = 0
     flags = _TAG_FLAGS
     hints = BOILERPLATE_CLASS_HINTS
-    i, n = 0, len(html)
-    find = html.find
-    tag_match = _TAG_RE.match
-    class_search = _CLASS_RE.search
-    pend: str | None = None  # end-tag event funnel: one inline handler site
-    try:
-        while i < n or pend is not None:
-            if pend is not None:
-                name, pend = pend, None
-                f = flags.get(name, 0)
-                if f & _F_SKIP:
-                    if skip_depth:
-                        skip_depth -= 1
-                    continue
+    for end, name, cls, slash, lt, bad, text in _TOKEN_RE.findall(html):
+        if name:
+            name = name.lower()
+            f = flags.get(name, 0)
+            if f & _F_SKIP:
+                if not slash:  # start + end would have no net effect
+                    skip_depth += 1
+            else:
+                is_bp = bool(f & _F_BP)
+                if cls and not is_bp:
+                    if cls[0] in "\"'":
+                        cls = cls[1:-1]
+                    if "&" in cls:
+                        cls = unescape(cls)
+                    is_bp = not hints.isdisjoint(cls.lower().split())
+                if not f & _F_VOID:
+                    elem_stack.append((name, is_bp))
+                    if is_bp:
+                        bp_depth += 1
+                    if slash:
+                        end = name
+                if f & _F_ANCHOR:
+                    anchor_depth += 1
+                elif f & _F_MERGE:
+                    merge_depth += 1
+                    if merge_depth == 1:
+                        open_blocks.append(Block(tag=name, boilerplate_ancestor=bp_depth > 0))
+                elif f & _F_BLOCK and merge_depth == 0:
+                    open_blocks.append(Block(tag=name, boilerplate_ancestor=bp_depth > 0))
+        elif end:
+            end = end.lower()
+        elif bad:
+            raise _FallbackToStdlib
+        elif lt and not skip_depth and open_blocks:
+            blk = open_blocks[-1]
+            blk._parts.append("<")
+            if anchor_depth:
+                blk.link_chars += 1
+        if end:
+            f = flags.get(end, 0)
+            if f & _F_SKIP:
+                if skip_depth:
+                    skip_depth -= 1
+            elif not f & _F_VOID:  # void elements never enter the stack
                 # close the NEAREST open element with this name (standard
                 # HTML recovery); fast path: well-nested markup
-                if elem_stack and elem_stack[-1][0] == name:
-                    if elem_stack[-1][1]:
+                if elem_stack and elem_stack[-1][0] == end:
+                    if elem_stack.pop()[1]:
                         bp_depth -= 1
-                    elem_stack.pop()
                 else:
                     for j in range(len(elem_stack) - 1, -1, -1):
-                        if elem_stack[j][0] == name:
-                            for _t, was_bp in elem_stack[j:]:
-                                if was_bp:
-                                    bp_depth -= 1
+                        if elem_stack[j][0] == end:
+                            bp_depth -= sum(1 for _t, was_bp in elem_stack[j:] if was_bp)
                             del elem_stack[j:]
                             break
-                if not f & (_F_ANCHOR | _F_MERGE | _F_CELLSEP | _F_BLOCK):
-                    continue  # plain container, the common case
                 if f & _F_ANCHOR:
                     if anchor_depth:
                         anchor_depth -= 1
                 elif f & _F_MERGE:
                     if merge_depth == 1 and open_blocks:
-                        blk = open_blocks.pop()
-                        blk.text = " ".join("".join(blk._parts).split())
-                        if blk.text:
-                            blocks.append(blk)
+                        _close_block(blocks, open_blocks.pop())
                     if merge_depth:
                         merge_depth -= 1
-                elif merge_depth > 0 and f & _F_CELLSEP:
+                elif merge_depth and f & _F_CELLSEP:
                     # cell/row boundaries become whitespace in merged blocks
                     if open_blocks:
                         open_blocks[-1]._parts.append(" ")
-                elif f & _F_BLOCK and merge_depth == 0:
-                    if open_blocks and open_blocks[-1].tag == name:
-                        blk = open_blocks.pop()
-                        blk.text = " ".join("".join(blk._parts).split())
-                        if blk.text:
-                            blocks.append(blk)
-                continue
-            lt = find("<", i)
-            if lt != i:
-                s = html[i:] if lt < 0 else html[i:lt]
-                if s and skip_depth == 0 and open_blocks:
-                    if "&" in s:
-                        s = unescape(s)
-                    blk = open_blocks[-1]
-                    blk._parts.append(s)
-                    if anchor_depth > 0:
-                        blk.link_chars += len(" ".join(s.split()))
-                if lt < 0:
-                    break
-            nxt = html[lt + 1] if lt + 1 < n else ""
-            # comment check only under '!' — '<!--' implies nxt == '!', so
-            # hoisting the nxt dispatch saves a startswith per tag (~200
-            # tags/page) with identical semantics
-            if nxt == "!" and html.startswith("<!--", lt):
-                cm = _COMMENT_CLOSE_RE.search(html, lt + 4)
-                if cm is None:
-                    # invalid/unterminated comment ('<!-->', '<!--->', or
-                    # EOF): stdlib close() emits through the next '>' as
-                    # data and resumes; with no '>', it emits only up to
-                    # the NEXT '<' (exclusive) and reprocesses from there
-                    # — NOT the whole remainder (goahead(end=1) recovery;
-                    # round-5 differential-fuzz fix, the one-fragment
-                    # flush drifted link_chars by the collapsed gap)
-                    g = find(">", lt + 1)
-                    if g < 0:
-                        g2 = find("<", lt + 1)
-                        s = html[lt:] if g2 < 0 else html[lt:g2]
-                    else:
-                        s = html[lt : g + 1]
-                    if s and skip_depth == 0 and open_blocks:
-                        if "&" in s:
-                            s = unescape(s)
-                        blk = open_blocks[-1]
-                        blk._parts.append(s)
-                        if anchor_depth > 0:
-                            blk.link_chars += len(" ".join(s.split()))
-                    if g >= 0:
-                        i = g + 1
-                        continue
-                    if g2 < 0:
-                        break
-                    i = g2
-                    continue
-                i = cm.end()
-                continue
-            if nxt in ("!", "?"):
-                end = find(">", lt + 2)
-                if end < 0:  # unterminated decl/PI: data up to next '<'
-                    g2 = find("<", lt + 1)
-                    s = html[lt:] if g2 < 0 else html[lt:g2]
-                    if s and skip_depth == 0 and open_blocks:
-                        if "&" in s:
-                            s = unescape(s)
-                        blk = open_blocks[-1]
-                        blk._parts.append(s)
-                        if anchor_depth > 0:
-                            blk.link_chars += len(" ".join(s.split()))
-                    if g2 < 0:
-                        break
-                    i = g2
-                    continue
-                i = end + 1
-                continue
-            is_letter = "a" <= nxt <= "z" or "A" <= nxt <= "Z"
-            if nxt == "/" and not (
-                lt + 2 < n
-                and ("a" <= html[lt + 2] <= "z" or "A" <= html[lt + 2] <= "Z")
-            ):
-                # '</' + non-name: html.parser consumes it as a bogus
-                # comment (up to and including the next '>'), emitting
-                # nothing; if no '>' follows, close() emits data up to
-                # the next '<' and reprocesses from there
-                end = find(">", lt + 2)
-                if end < 0:
-                    g2 = find("<", lt + 1)
-                    s = html[lt:] if g2 < 0 else html[lt:g2]
-                    if s and skip_depth == 0 and open_blocks:
-                        if "&" in s:
-                            s = unescape(s)
-                        blk = open_blocks[-1]
-                        blk._parts.append(s)
-                        if anchor_depth > 0:
-                            blk.link_chars += len(" ".join(s.split()))
-                    if g2 < 0:
-                        break
-                    i = g2
-                    continue
-                i = end + 1
-                continue
-            if not is_letter and nxt != "/":
-                # recovery: bare '<' is text
-                if skip_depth == 0 and open_blocks:
-                    blk = open_blocks[-1]
-                    blk._parts.append("<")
-                    if anchor_depth > 0:
-                        blk.link_chars += 1  # len(" ".join("<".split()))
-                i = lt + 1
-                continue
-            m = tag_match(html, lt)
-            if not m:
-                if find(">", lt) < 0:
-                    # incomplete tag at EOF: close() emits data up to the
-                    # next '<' and reprocesses from there (never the whole
-                    # remainder in one fragment — the whitespace-collapse
-                    # of a merged fragment drifts link_chars)
-                    g2 = find("<", lt + 1)
-                    s = html[lt:] if g2 < 0 else html[lt:g2]
-                    if s and skip_depth == 0 and open_blocks:
-                        if "&" in s:
-                            s = unescape(s)
-                        blk = open_blocks[-1]
-                        blk._parts.append(s)
-                        if anchor_depth > 0:
-                            blk.link_chars += len(" ".join(s.split()))
-                    if g2 < 0:
-                        break
-                    i = g2
-                    continue
-                raise _FallbackToStdlib  # tag outside the well-formed subset
-            end_g, name, attrs_s, slash = m.group("end", "name", "attrs", "slash")
-            name = name.lower()
-            i = m.end()
-            if end_g:
-                if attrs_s.strip() or slash:
-                    raise _FallbackToStdlib  # junk inside an end tag
-                pend = name
-                continue
-            f = flags.get(name, 0)
-            if f & _F_SKIP:
-                skip_depth += 1
-            else:
-                is_bp = bool(f & _F_BP)
-                if not is_bp and attrs_s and "class" in attrs_s.lower():
-                    cm = class_search(attrs_s)
-                    if cm:
-                        val = cm.group(2) or cm.group(3) or cm.group(4) or ""
-                        if "&" in val:
-                            val = unescape(val)
-                        is_bp = not hints.isdisjoint(val.lower().split())
-                if not f & _F_VOID:
-                    elem_stack.append((name, is_bp))
-                    if is_bp:
-                        bp_depth += 1
-                if f & (_F_ANCHOR | _F_MERGE | _F_BLOCK):
-                    if f & _F_ANCHOR:
-                        anchor_depth += 1
-                    elif f & _F_MERGE:
-                        merge_depth += 1
-                        if merge_depth == 1:
-                            open_blocks.append(
-                                Block(tag=name, boilerplate_ancestor=bp_depth > 0)
-                            )
-                    elif merge_depth == 0:
-                        open_blocks.append(
-                            Block(tag=name, boilerplate_ancestor=bp_depth > 0)
-                        )
-            if slash:
-                pend = name
-            elif name in CDATA_CONTENT_TAGS:
-                # CDATA mode: raw content until the strict matching close
-                cm2 = _SKIP_CLOSE_RES[name].search(html, i)
-                if cm2 is None:
-                    break  # unclosed script/style swallows the rest
-                pend = name
-                i = cm2.end()
-    except _FallbackToStdlib:
-        raise
-    except Exception:  # defensive: degrade to blocks recovered so far (S3)
-        pass
+                elif f & _F_BLOCK and not merge_depth:
+                    if open_blocks and open_blocks[-1].tag == end:
+                        _close_block(blocks, open_blocks.pop())
+        if text and not skip_depth and open_blocks:
+            if "&" in text:
+                text = unescape(text)
+            blk = open_blocks[-1]
+            blk._parts.append(text)
+            if anchor_depth:
+                blk.link_chars += len(" ".join(text.split()))
     while open_blocks:  # flush unclosed blocks (malformed html)
-        blk = open_blocks.pop()
-        blk.text = " ".join("".join(blk._parts).split())
-        if blk.text:
-            blocks.append(blk)
+        _close_block(blocks, open_blocks.pop())
     return blocks
 
 
 def parse_blocks(html: str) -> list[Block]:
     """Parse HTML into ordered text blocks. Malformed HTML degrades to
-    whatever blocks were recoverable (never raises). Markup outside the
-    fast tokenizer's well-formed subset re-parses through stdlib."""
+    whatever blocks were recoverable (never raises).
+
+    One regex pass tokenizes the page (see _TOKEN_RE); a page with any
+    markup outside the tokenizer's subset re-parses whole through
+    parse_blocks_stdlib, whose output the fast path matches exactly."""
     try:
         return _fast_parse(html)
     except _FallbackToStdlib:

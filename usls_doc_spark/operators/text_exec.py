@@ -121,7 +121,8 @@ def _emit_doc_trigram_counts(batches):
     every distinct char trigram of each doc with length >= 3. Python
     slicing and len() operate on codepoints exactly like Spark's
     split(text, '') / length() (verified incl. astral-plane chars), so
-    the emitted rows are the template's dtg rows verbatim."""
+    the emitted rows are the template's dtg rows verbatim. A NULL doc_id
+    stays NULL (nullable Int64), as the template groups it."""
     import pandas as pd
 
     for pdf in batches:
@@ -137,7 +138,7 @@ def _emit_doc_trigram_counts(batches):
             ks.extend(c.values())
         yield pd.DataFrame(
             {
-                "doc_id": pd.array(ids, dtype="int64"),
+                "doc_id": pd.array(ids, dtype="Int64"),
                 "t": pd.array(ts, dtype=object),
                 "k": pd.array(ks, dtype="int64"),
             }

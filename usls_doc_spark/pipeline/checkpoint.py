@@ -39,11 +39,26 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .extract import extract_pages
 
 DEFAULT_N_BUCKETS = 64
 DEFAULT_SKEW_BYTES = 64 * 1024  # pages >= this are "oversized"
+
+# checkpoint row type (the cast also names the literal structs' fields);
+# containsNull=False keeps the field nullability through inline(): bucket
+# nullable, the counts NOT NULL
+_CHECKPOINT_ROWS = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("bucket", T.IntegerType()),
+            T.StructField("doc_count", T.LongType(), nullable=False),
+            T.StructField("byte_count", T.LongType(), nullable=False),
+        ]
+    ),
+    containsNull=False,
+)
 
 
 def _bucket(col, n_buckets: int):
@@ -155,10 +170,13 @@ def run_extraction_job(
         .agg(F.sum("doc_count").alias("doc_count"), F.sum("byte_count").alias("byte_count"))
         .collect()
     }
-    ckpt = spark.createDataFrame(
-        [(b, *totals.get(b, (0, 0))) for b in remaining],
-        "bucket int, doc_count bigint not null, byte_count bigint not null",
-    ).select(
+    # literal rows on a one-partition JVM source: createDataFrame on a list
+    # would run them through a Python RDD (a Python task and a file per
+    # default-parallelism slice, on every job call)
+    rows = F.array(
+        *(F.struct(F.lit(b), *map(F.lit, totals.get(b, (0, 0)))) for b in remaining)
+    ).cast(_CHECKPOINT_ROWS)
+    ckpt = spark.range(1, numPartitions=1).select(F.inline(rows)).select(
         F.lit(run_id).alias("run_id"),
         "bucket",
         F.lit("done").alias("status"),
