@@ -1,6 +1,8 @@
 """Idempotent resume + lineage tests (FIXTURES.md §5, SURVEY.md §5.2.4)."""
 
+import contextlib
 import pathlib
+import re
 
 import pytest
 
@@ -159,8 +161,105 @@ def test_resume_from_partial_run(spark, pages, tmp_path_factory):
     import shutil
 
     shutil.rmtree(f"{out}/_checkpoint")
-    run_extraction_job(spark, pages, out, run_id="run4", max_buckets=4)
+    lineage_before = sorted(tuple(r) for r in spark.read.parquet(f"{out}/_lineage").collect())
+    r4 = run_extraction_job(spark, pages, out, run_id="run4", max_buckets=4)
     again = spark.read.parquet(f"{out}/extracted")
     assert again.count() == n_input
     assert again.select("url").distinct().count() == n_input
     assert all(len(f) == 1 for f in _bucket_files(out).values())
+    # run 4's lineage counts exactly the rows of the buckets it re-did, and
+    # no other run's lineage changed
+    lineage4 = spark.read.parquet(f"{out}/_lineage")
+    redone = again.filter(F.col("bucket").isin(r4["buckets"])).count()
+    assert lineage4.filter("run_id = 'run4'").agg(F.sum("doc_count")).collect()[0][0] == redone
+    assert sorted(tuple(r) for r in lineage4.filter("run_id != 'run4'").collect()) == lineage_before
+
+
+def test_lineage_parquet_schema(spark, tmp_path_factory):
+    """``_lineage`` keeps its parquet schema down to the NOT NULL flags:
+    doc_count NOT NULL, the other counts nullable."""
+    import pyarrow.parquet as pq
+
+    from usls_doc_spark.pipeline.checkpoint import run_extraction_job
+
+    out = str(tmp_path_factory.mktemp("lineage"))
+    run_extraction_job(spark, _tiny_pages(spark), out, run_id="l1", n_buckets=4)
+    files = sorted(pathlib.Path(out, "_lineage").glob("*.parquet"))
+    assert files
+    for f in files:
+        assert [(c.name, str(c.type), c.nullable) for c in pq.read_schema(f)] == [
+            ("run_id", "string", True),
+            ("partition_id", "int32", True),
+            ("doc_count", "int64", False),
+            ("byte_count", "int64", True),
+            ("elapsed_ms", "int64", True),
+            ("error_count", "int64", True),
+            ("started_at", "timestamp[ns]", False),
+        ]
+    got = spark.read.parquet(f"{out}/_lineage").selectExpr("sum(doc_count)", "sum(error_count)")
+    assert tuple(got.collect()[0]) == (2, 1)  # both pages; the null-html one is an error
+
+
+@contextlib.contextmanager
+def _job_group(spark, group, description):
+    """Run the block's Spark jobs in job group ``group``; yields a function
+    listing (name, description) of every job the group has run."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out = []
+        for j in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+            d = store.job(j)
+            out.append((d.name(), d.description().get() if d.description().isDefined() else None))
+        return out
+
+    sc.setJobGroup(group, description)
+    try:
+        yield jobs
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_resume_runs_only_data_jobs(spark, pages, tmp_path_factory):
+    """A resume that commits 32 buckets reads back only those bucket
+    directories with known schemas: Spark lists them on the driver (no
+    listing job at or below 32 paths), infers no schema, and nothing is
+    local-checkpointed."""
+    from usls_doc_spark.pipeline.checkpoint import completed_buckets, run_extraction_job
+
+    out = str(tmp_path_factory.mktemp("jobs"))
+    run_extraction_job(spark, pages, out, run_id="j1", max_buckets=32)
+    with _job_group(spark, "test-resume-jobs", "resume") as jobs:
+        r2 = run_extraction_job(spark, pages, out, run_id="j2")
+        ran = jobs()
+    assert len(r2["buckets"]) == 32
+    assert completed_buckets(spark, out) == set(range(64))
+    assert not [j for j in ran if (j[1] or "").startswith("Listing leaf files and directories")], ran
+    assert not [j for j in ran if "localCheckpoint" in j[0]], ran
+    assert len(ran) <= 9, ran
+
+
+def test_phases_name_jobs_and_restore_description(spark, tmp_path_factory):
+    """Each phase's Spark jobs carry the phase's name; the caller's job
+    description is back in place after every call."""
+    from usls_doc_spark.pipeline.checkpoint import run_extraction_job
+
+    out = str(tmp_path_factory.mktemp("phases"))
+    sc = spark.sparkContext
+    with _job_group(spark, "test-phases", "caller description") as jobs:
+        run_extraction_job(spark, _tiny_pages(spark), out, run_id="p1", n_buckets=4, max_buckets=3)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        r2 = run_extraction_job(spark, _tiny_pages(spark), out, run_id="p2", n_buckets=4)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        r3 = run_extraction_job(spark, _tiny_pages(spark), out, run_id="p3", n_buckets=4)
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        ran = jobs()
+    phases = {"plan", "extract", "lineage", "checkpoint"}
+    named = [re.fullmatch(r"extraction job (p\d): (\w+)", d or "") for _, d in ran]
+    assert all(m and m[2] in phases for m in named), ran
+    assert {m[2] for m in named if m[1] == "p2"} == phases
+    assert set(r2["phase_s"]) == phases and all(t >= 0 for t in r2["phase_s"].values())
+    assert r3["skipped"] and set(r3["phase_s"]) == {"plan"}
